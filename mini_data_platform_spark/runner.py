@@ -21,12 +21,13 @@ Two execution modes:
   clean→window→sink plan over every file at once. Per-file row counts
   come from one small groupBy on the file rank. This is the 100 TB path:
   no per-file driver round-trips, one shuffle (the dedup window), and the
-  sink commits once (idempotent upsert makes retries safe). As of round
-  14 the staging itself is file-count-scalable: files are read as a few
-  signature-grouped MULTI-PATH scans (rank recovered from
-  ``input_file_name``) instead of per-file reads chained through an
-  O(n²)-analysis union — the 512-file wall the INGEST_SCALE file-count
-  ladder measured (see ``_stage_valid_files``).
+  sink commits once (idempotent upsert makes retries safe). The
+  staging itself is file-count-scalable: files are read as a few
+  signature-grouped scans, each over a directory of hardlinks named
+  ``<rank>-<basename>`` (sources/scanstage.py), so every row's file
+  rank is parsed from ``input_file_name`` — instead of per-file reads
+  chained through an O(n²)-analysis union, the 512-file wall the
+  INGEST_SCALE file-count ladder measured (see ``_stage_valid_files``).
 - **per-file mode** (``per_file=True``): the reference's loop, for
   deployments that need per-file transactions / fault isolation at the
   cost of one job per file.
@@ -43,15 +44,14 @@ inside Spark tasks, so task retries cannot double-move files.
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
-import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from mini_data_platform_spark.operators.clean import clean_sales  # noqa: F401 — kept for API compat
 from mini_data_platform_spark.operators.dedup import (
     INGEST_ORDER_COL,
     dedup_keep_latest,
@@ -62,15 +62,17 @@ from mini_data_platform_spark.registry import (
     TableSpec,
     clean_table,
 )
-from mini_data_platform_spark.schema import SALES_COLUMNS  # noqa: F401
 from mini_data_platform_spark.sinks.audit import AuditLog
 from mini_data_platform_spark.sinks.objects import move_object
 from mini_data_platform_spark.sources.readers import read_file_as_strings
-from mini_data_platform_spark.sources.validate import validate_file
 
 logger = logging.getLogger(__name__)
 
 FILE_RANK_COL = "_file_rank"
+
+#: batches of at least this many valid files persist the cleaned frame
+#: across its two uses (the per-file row counts, then the sink)
+PERSIST_MIN_FILES = 64
 
 
 @dataclass
@@ -115,47 +117,6 @@ def _quarantine(
     if audit:
         audit.log_file_status(path, failed_dir, reason, error=error)
     return FileOutcome(path, reason, error=error)
-
-
-def _prepare_one(
-    spark: SparkSession, path: str, rank: int, spec: TableSpec
-) -> DataFrame:
-    """Read one validated file and stage it for the unioned clean: string
-    cast, canonical columns, file-rank + ingest-order tags."""
-    df = read_file_as_strings(spark, path)
-    for c in spec.columns:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("string"))
-    return with_ingest_order(df.select(*spec.columns)).withColumn(
-        FILE_RANK_COL, F.lit(rank)
-    )
-
-
-class _NoSignature(Exception):
-    """A file whose read-signature cannot be derived driver-side (remote
-    path, unreadable head) — the batch falls back to the per-file union
-    staging, which needs no signatures."""
-
-
-#: basenames whose URI spelling (what ``input_file_name()`` reports) is
-#: guaranteed identical to ``os.path.basename`` — the rank join's key
-#: equality proof. Anything else falls back to per-file staging.
-_SAFE_BASE = re.compile(r"^[A-Za-z0-9._=-]+$")
-
-
-_FILE_BASE_COL = "_file_base"
-
-
-def _csv_header_line(path: str) -> str:
-    """The file's RAW first line — two CSVs with the identical header
-    line parse to the identical column tuple, which is exactly the
-    condition for reading them in ONE multi-path scan."""
-    try:
-        with open(path, "rb") as fh:
-            line = fh.readline(1 << 20)
-    except OSError as e:
-        raise _NoSignature(path) from e
-    return line.decode("utf-8", errors="replace").rstrip("\r\n")
 
 
 #: JSON files above this size are staged as their own single-file scan
@@ -276,48 +237,44 @@ def _json_type_signature(path: str, layout: str) -> tuple | None:
     return merged
 
 
-def _file_signature(path: str) -> tuple:
-    """Group key under which files are SAFE to read as one multi-path
-    scan with per-file semantics preserved:
+def _file_signature(path: str) -> tuple | None:
+    """Group key under which files are SAFE to read as one scan with
+    per-file semantics preserved, or ``None`` when the file must be
+    read alone at its own path:
 
-    - csv: identical raw header line (same parsed columns, same order —
-      positional alignment under one inferred all-string schema);
-      compressed CSVs (raw header bytes are codec garbage) stage solo;
+    - csv: identical parsed header (same columns, same order —
+      positional alignment under one explicit all-string schema);
+      headers the driver-side parser rejects (compressed, quoted
+      multi-line, empty or duplicate names) read alone;
     - json: same layout (array vs ndjson) AND same merged top-level
       key/type signature, parsed whole driver-side. Layout alone is NOT
       enough: Spark infers ONE schema per scan, so cross-file type
       drift (long in file A, double in file B) would widen group-wide
       and the cast-to-string would render different bytes than per-file
       staging ('123.0' vs '123'). Files whose signature can't be
-      derived (big, compressed, unparseable) stage solo — per-file
-      semantics by construction, no batch-wide fallback;
+      derived (big, compressed, unparseable) read alone;
     - parquet: identical normalized footer schema (read driver-side via
       pyarrow — no py4j round trip); files with drifted footers land in
       separate groups and meet only AFTER the all-string cast, exactly
       like the per-file path;
-    - orc / anything else: one group per file (rare here; keeps legacy
-      per-file read semantics without a special case)."""
+    - orc / anything else, remote paths, unreadable heads: alone."""
     from mini_data_platform_spark.sources.formats import (
         detect_format_path,
-        is_compressed_path,
         sniff_json_layout_path,
+    )
+    from mini_data_platform_spark.sources.validate import (
+        _local_csv_header_columns,
     )
 
     try:
         fmt = detect_format_path(path)
         if fmt == "csv":
-            if is_compressed_path(path):
-                # Spark decompresses this transparently in the group
-                # scan, but the raw header-line signature would be
-                # codec bytes — give it a one-file group instead
-                return ("csv", ("__solo__", path))
-            return ("csv", _csv_header_line(path))
+            cols = _local_csv_header_columns(path)
+            return None if cols is None else ("csv", tuple(cols))
         if fmt == "json":
             layout = sniff_json_layout_path(path)
             type_sig = _json_type_signature(path, layout)
-            if type_sig is None:
-                return ("json", layout, ("__solo__", path))
-            return ("json", layout, type_sig)
+            return None if type_sig is None else ("json", layout, type_sig)
         if fmt == "parquet":
             import pyarrow.parquet as pq
 
@@ -329,171 +286,117 @@ def _file_signature(path: str) -> tuple:
                     for n, t in zip(schema.names, schema.types)
                 ),
             )
-    except _NoSignature:
-        raise
-    except Exception as e:  # noqa: BLE001 — unreadable head/footer
-        raise _NoSignature(path) from e
-    return (fmt, path)
-
-
-def _csv_group_schema(header_line: str):
-    """Explicit all-string StructType from a CSV group's raw header
-    line — the same names Spark's header pass would produce, minus the
-    every-file name-inference scan. Returns ``None`` (let Spark infer)
-    whenever the header can't be trusted driver-side: quoted
-    multi-line header (odd quote count), unparseable, empty, an empty
-    field name (Spark substitutes ``_cN``), or duplicate names (Spark
-    dedups with suffixes) — the fallback read reproduces those edge
-    semantics exactly."""
-    import csv as _csv
-    import io
-
-    if not header_line or header_line.count('"') % 2:
+    except Exception:  # noqa: BLE001 — unreadable head/footer: alone
         return None
-    try:
-        row = next(_csv.reader(io.StringIO(header_line)))
-    except (StopIteration, _csv.Error):
-        return None
-    if not row or any(not c for c in row) or len(set(row)) != len(row):
-        return None
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [T.StructField(c, T.StringType()) for c in row]
-    )
+    return None
 
 
 def _read_group(
     spark: SparkSession,
-    sig: tuple,
+    sig: tuple | None,
     paths: list[str],
-    stage_dirs: list[str] | None = None,
+    ranks: list[int],
+    stage_dirs: list[str],
 ) -> DataFrame:
-    """One multi-path scan for a signature group. Large LOCAL groups
-    are hardlink-staged into a temp dir and read as ONE directory —
-    explicit path lists pay a per-path JVM qualification round at
-    reader-build time (~1.8 ms/path: 7 s of driver wall at 4096 paths,
-    the INGEST_SCALE r15 ladder wall), while a directory is one
-    ``listStatus``. Provenance is unchanged (links carry the original
-    basenames). The staging dir is appended to ``stage_dirs`` — the
-    caller keeps it alive until the batch's actions have run."""
+    """One scan for a signature group, every row tagged with its file's
+    listing rank in ``FILE_RANK_COL``. The group's files are
+    hardlink-staged as ``<rank>-<basename>`` and read as ONE directory
+    (sources/scanstage.py): one ``listStatus`` instead of a ~1.8 ms/path
+    qualification round, and the rank parsed back out of
+    ``input_file_name()``. The staging dir is appended to
+    ``stage_dirs`` — the caller keeps it alive until the batch's
+    actions have run. A file with no signature (``sig is None``), or a
+    group that cannot be linked, is read file by file at its own paths
+    with a literal rank."""
+    from mini_data_platform_spark.sources import scanstage
     from mini_data_platform_spark.sources.readers import (
         normalize_column_names,
         read_file,
     )
-    from mini_data_platform_spark.sources.scanstage import stage_link_dir
 
+    link_dir = None if sig is None else scanstage.stage_link_dir(paths, ranks)
+    if link_dir is None:
+        frames = [
+            read_file(spark, p).withColumn(FILE_RANK_COL, F.lit(r))
+            for p, r in zip(paths, ranks)
+        ]
+        return functools.reduce(DataFrame.unionByName, frames)
+    stage_dirs.append(link_dir)
     fmt = sig[0]
-    scan: list[str] | str = paths
-    if stage_dirs is not None and fmt in ("csv", "json", "parquet"):
-        d = stage_link_dir(paths)
-        if d is not None:
-            stage_dirs.append(d)
-            scan = d
     if fmt == "csv":
-        reader = spark.read.option("header", True).option(
-            "mode", "PERMISSIVE"
-        )
-        # the group's raw header line IS the signature: derive the
-        # explicit all-string schema from it driver-side — Spark's
-        # column-NAME inference touches every file of the scan at
-        # reader-build time (~7.5 s at 4096 files, measured r15) to
-        # produce exactly this schema
-        schema = (
-            _csv_group_schema(sig[1]) if isinstance(sig[1], str) else None
-        )
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.csv(scan)
-    elif fmt == "json" and sig[1] == "array":
-        df = spark.read.option("multiLine", True).json(scan)
-    elif fmt == "json":
-        df = spark.read.json(scan)
-    elif fmt == "parquet":
+        # the group's parsed header IS the signature: the explicit
+        # all-string schema spares Spark's column-NAME inference, which
+        # touches every file of the scan at reader-build time (~7.5 s at
+        # 4096 files, measured r15)
         df = (
-            spark.read.parquet(scan)
-            if isinstance(scan, str)
-            else spark.read.parquet(*scan)
+            spark.read.option("header", True)
+            .option("mode", "PERMISSIVE")
+            .schema(
+                T.StructType(
+                    [T.StructField(c, T.StringType()) for c in sig[1]]
+                )
+            )
+            .csv(link_dir)
         )
-    else:  # single-file group (orc & friends): the legacy reader
-        df = read_file(spark, paths[0], fmt)
-    return normalize_column_names(df)
+    elif fmt == "json" and sig[1] == "array":
+        df = spark.read.option("multiLine", True).json(link_dir)
+    elif fmt == "json":
+        df = spark.read.json(link_dir)
+    else:
+        df = spark.read.parquet(link_dir)
+    return normalize_column_names(df).withColumn(
+        FILE_RANK_COL, scanstage.link_id()
+    )
 
 
 def _stage_valid_files(
     spark: SparkSession,
     valid: list[str],
     spec: TableSpec,
-    stage_dirs: list[str] | None = None,
+    stage_dirs: list[str],
 ) -> DataFrame:
-    """Stage ALL valid files as a handful of multi-path scans — the
-    100 TB staging plan (round-14, replacing the per-file read +
-    N-way chained union):
+    """Stage ALL valid files as a handful of scans — the 100 TB staging
+    plan (round-14, replacing the per-file read + N-way chained union):
 
     - the old plan paid one py4j read/analysis per file plus an
       O(n²) left-deep unionByName analysis — measured 30 s of pure
       DRIVER time at 256 files and the dominant wall at 512+
       (INGEST_SCALE file_count_runs) — and executed 2+ tasks per file;
     - this plan groups files by :func:`_file_signature` (read-safe
-      groups), issues ONE ``spark.read`` per group (Spark bin-packs
-      small files into ``maxPartitionBytes`` splits — constant plan
-      size, ~#cores tasks), and recovers each row's file rank by
-      joining ``input_file_name()``'s basename against a broadcast
-      (basename → listing rank) map, so cross-file precedence stays
-      byte-identical to the reference's sequential loop.
-
-    Raises :class:`_NoSignature` when any signature cannot be derived
-    (remote/unreadable path) or basenames collide across directories —
-    the caller falls back to the per-file union staging."""
-    if _FILE_BASE_COL in spec.columns:  # provenance-name collision
-        raise _NoSignature(_FILE_BASE_COL)
-    base_ranks = []
-    seen = set()
+      groups) and issues ONE ``spark.read`` per group over its
+      hardlink staging dir (Spark bin-packs small files into
+      ``maxPartitionBytes`` splits — constant plan size, ~#cores
+      tasks); each row's listing rank comes from its link's name, so
+      cross-file precedence stays byte-identical to the reference's
+      sequential loop."""
+    groups: dict[tuple, list[int]] = {}
     for rank, path in enumerate(valid):
-        base = os.path.basename(path)
-        if base in seen:  # ambiguous rank map — e.g. recursive listing
-            raise _NoSignature(f"duplicate basename: {base}")
-        if not _SAFE_BASE.match(base):
-            # input_file_name() reports the URI form; for names outside
-            # the URI-safe set the two spellings can disagree (and a
-            # blanket url_decode turns '+' into a space), so the rank
-            # join could silently DROP rows — refuse and stage legacy
-            raise _NoSignature(f"non-URI-safe basename: {base}")
-        seen.add(base)
-        base_ranks.append((base, rank))
-    groups: dict[tuple, list[str]] = {}
-    for path in valid:
-        groups.setdefault(_file_signature(path), []).append(path)
+        sig = _file_signature(path)
+        # an unsigned file is a group of its own
+        groups.setdefault((sig, rank if sig is None else None), []).append(
+            rank
+        )
 
     frames = []
-    for sig, paths in groups.items():
-        df = _read_group(spark, sig, paths, stage_dirs)
-        # provenance BEFORE any projection: input_file_name() is only
-        # defined over the scan's own rows (URI-encoded -> url_decode)
-        df = df.withColumn(
-            _FILE_BASE_COL,
-            F.regexp_extract(F.input_file_name(), "([^/]+)$", 1),
+    for (sig, _), ranks in groups.items():
+        df = _read_group(
+            spark, sig, [valid[r] for r in ranks], ranks, stage_dirs
         )
-        data_cols = [c for c in df.columns if c != _FILE_BASE_COL]
-        df = df.select(
-            *[F.col(c).cast("string").alias(c) for c in data_cols],
-            _FILE_BASE_COL,
+        frames.append(
+            df.select(
+                *[
+                    (
+                        F.col(c).cast("string")
+                        if c in df.columns
+                        else F.lit(None).cast("string")
+                    ).alias(c)
+                    for c in spec.columns
+                ],
+                FILE_RANK_COL,
+            )
         )
-        for c in spec.columns:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("string"))
-        frames.append(df.select(*spec.columns, _FILE_BASE_COL))
-    staged = frames[0]
-    for f in frames[1:]:  # one union per GROUP, not per file
-        staged = staged.unionByName(f)
-    ranks = spark.createDataFrame(
-        base_ranks, f"{_FILE_BASE_COL} string, {FILE_RANK_COL} long"
-    )
-    return (
-        with_ingest_order(staged)
-        .join(F.broadcast(ranks), _FILE_BASE_COL)
-        .drop(_FILE_BASE_COL)
-    )
+    # one union per GROUP, not per file
+    return with_ingest_order(functools.reduce(DataFrame.unionByName, frames))
 
 
 def run_batch_ingest(
@@ -669,17 +572,7 @@ def _run_batch_ingest(
     persisted = False
     try:
         try:
-            try:
-                staged = _stage_valid_files(spark, valid, spec, stage_dirs)
-            except _NoSignature:
-                # remote/unreadable heads or basename collisions: the
-                # signature-grouped multi-path scan cannot prove itself
-                # safe — stage the legacy way (per-file read + union)
-                staged = _prepare_one(spark, valid[0], 0, spec)
-                for rank, path in enumerate(valid[1:], start=1):
-                    staged = staged.unionByName(
-                        _prepare_one(spark, path, rank, spec)
-                    )
+            staged = _stage_valid_files(spark, valid, spec, stage_dirs)
             # clean_table conforms to exactly the spec's canonical
             # columns; the batch job must keep the bookkeeping tags, so
             # the same P4-P8 stages are applied with the tags carried
@@ -700,11 +593,7 @@ def _run_batch_ingest(
         # Persist across the two uses when the batch is many-files;
         # volume-regime batches (few big files) keep the rescan, which
         # is cheaper there than caching the whole batch.
-        from mini_data_platform_spark.sources.scanstage import (
-            STAGE_MIN_FILES,
-        )
-
-        persisted = len(valid) >= STAGE_MIN_FILES
+        persisted = len(valid) >= PERSIST_MIN_FILES
         if persisted:
             cleaned = cleaned.persist()
         deduped = dedup_keep_latest(

@@ -1,32 +1,31 @@
-"""Hardlink scan staging — the file-count-scale fix for EXPLICIT-path
-multi-file scans (round-15; INGEST_SCALE r15 diagnosis).
+"""Hardlink scan staging — the one way a group of files is scanned.
 
-``spark.read.csv([p1 … pN])`` with thousands of explicit paths pays a
-per-path qualification/glob round in the JVM during READER CONSTRUCTION
-— measured ~1.8 ms/path on local files, i.e. 7.4 s of pure driver wall
-at 4096 paths and ~18 s at 10k, per scan — while reading ONE directory
-costs a single ``listStatus`` (~0.1 s at 10k entries). The ingest path
-builds two such scans per batch (the grouped validation probe and the
-grouped staging read), which is exactly the 4096/10k-file ladder wall.
+Every multi-file scan in the ingest path (the runner's signature-group
+reads, validation's CSV date probe and ndjson key probe) reads a
+DIRECTORY of hardlinks instead of an explicit path list:
 
-:func:`stage_link_dir` hardlinks a group's files (named by their
-basenames) into a fresh temp directory so the scan can read the
-DIRECTORY instead. Hardlinks are metadata-only (~12 µs each), keep the
-data alive regardless of later moves of the originals, and preserve
-basenames — so ``input_file_name()``-based provenance (the staging rank
-join, the probes' per-file verdicts) is unchanged.
+- reader construction is one ``listStatus`` instead of a per-path JVM
+  qualification round (~1.8 ms/path on local files: 7.4 s of driver
+  wall at 4096 paths, INGEST_SCALE r15);
+- each link is named ``<id>-<basename>``, so :func:`link_id` recovers
+  the caller's id for every scanned row straight from
+  ``input_file_name()`` — no basename map, no rank join, and no file
+  name (spaces, ``%``, duplicates across directories) can break it;
+- no link name starts with ``_`` or ``.``, which Spark's file listing
+  silently skips — a group holding ``_late.csv`` still scans every
+  file.
 
-Staging declines (returns ``None`` — callers keep the explicit-path
-scan, correct at any count) when:
+The basename is kept after the id because Spark picks the compression
+codec by extension (``.csv.gz``). Hardlinks are metadata-only (~12 µs
+each) and keep the data alive through later moves of the originals.
 
-- the group is small (< :data:`STAGE_MIN_FILES` — per-path cost is
-  negligible below that and the link dir would be pure overhead);
-- any path is remote / basenames collide (provenance would break);
-- ``os.link`` fails (cross-device tempdir, no-hardlink filesystem,
-  permissions) — the links made so far are rolled back.
+:func:`stage_link_dir` returns ``None`` when any file cannot be linked
+(remote path, missing file, cross-device tempdir, hardlink-less
+filesystem); the links made so far are rolled back and the caller reads
+those files at their own paths.
 
-The link dir must OUTLIVE every Spark action over the returned plan
-(plans are lazy); callers own cleanup via :func:`cleanup_dirs`.
+The link dir must OUTLIVE every Spark action over the scan (plans are
+lazy); callers own cleanup via :func:`cleanup_dirs`.
 """
 
 from __future__ import annotations
@@ -34,35 +33,38 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from collections.abc import Sequence
 
-#: below this many files the explicit-path scan's per-path cost is
-#: negligible (~1.8 ms each) and staging is not attempted
-STAGE_MIN_FILES = 64
+from pyspark.sql import Column, functions as F
 
 
-def stage_link_dir(paths: list[str]) -> str | None:
-    """Hardlink ``paths`` into a fresh temp dir, named by basename;
-    return the dir, or ``None`` when staging is not applicable. The
-    caller must keep the dir alive until every action over the scan has
-    run, then remove it (:func:`cleanup_dirs`)."""
-    if len(paths) < STAGE_MIN_FILES:
-        return None
-    seen: set[str] = set()
-    for p in paths:
-        base = os.path.basename(p)
-        if base in seen or not os.path.isfile(p):
-            return None
-        seen.add(base)
+def stage_link_dir(
+    paths: list[str], ids: Sequence[int] | None = None
+) -> str | None:
+    """Hardlink ``paths`` into a fresh temp dir as ``<id>-<basename>``
+    (``ids`` defaults to each path's list index); return the dir, or
+    ``None`` when some file cannot be linked. The caller must keep the
+    dir alive until every action over the scan has run, then remove it
+    (:func:`cleanup_dirs`)."""
+    if ids is None:
+        ids = range(len(paths))
     d = tempfile.mkdtemp(prefix="mdp_scanstage_")
     try:
-        for p in paths:
-            os.link(p, os.path.join(d, os.path.basename(p)))
+        for i, p in zip(ids, paths):
+            os.link(p, os.path.join(d, f"{int(i)}-{os.path.basename(p)}"))
     except OSError:
-        # cross-device tempdir / hardlink-less fs / raced delete:
-        # roll back and let the caller scan the explicit paths
         shutil.rmtree(d, ignore_errors=True)
         return None
     return d
+
+
+def link_id() -> Column:
+    """The ``<id>`` of the link each row of a staged scan was read from,
+    as a long. Evaluate it over the scan itself, before any shuffle:
+    ``input_file_name`` is empty after one."""
+    return F.regexp_extract(
+        F.input_file_name(), r"/([0-9]+)-[^/]*$", 1
+    ).cast("long")
 
 
 def cleanup_dirs(dirs: list[str]) -> None:

@@ -16,18 +16,21 @@ Reproduces the reference's validator semantics
 Verdicts are (valid: bool, error: str) per file, the unit the quarantine
 router consumes. Sampling keeps validation O(1) per file no matter the
 file size — at 100 TB the validator cost is bounded by file count.
+:func:`validate_files` judges many files at once: small CSVs and ndjson
+files share one probe job per group, each group scanned through its
+hardlink staging dir (sources/scanstage.py), so a row's file is its
+link's list index, whatever the file is called.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import SparkSession, functions as F
 
 from mini_data_platform_spark.registry import SALES_SPEC, TableSpec
 from mini_data_platform_spark.schema import SALES_COLUMNS
-from mini_data_platform_spark.sources import readers
+from mini_data_platform_spark.sources import readers, scanstage
 from mini_data_platform_spark.sources.formats import detect_format_path
 
 REQUIRED_COLUMNS = frozenset(SALES_COLUMNS)
@@ -50,15 +53,17 @@ def _missing(cols: list[str], spec: TableSpec) -> list[str]:
 
 
 def _local_csv_header_columns(path: str) -> list[str] | None:
-    """Driver-side CSV header parse — the file-count-scale fast path
-    (round-14: at 10k files the validator's cost is pure Spark JOB
-    COUNT, ~2 tiny jobs/file; the header check and the sample read's
-    schema inference are both satisfiable from the first line read
-    locally, leaving ONE job per file for the date probe). Returns
-    ``None`` whenever the header cannot be trusted locally — remote
-    path, empty file, quoted multi-line header, duplicate normalized
-    names — and the caller falls back to the Spark read, whose
-    semantics this path must exactly reproduce."""
+    """Driver-side CSV header parse — the one used by validation (column
+    check, header groups) and by the runner (read signature, explicit
+    all-string schema). At 10k files the validator's cost is pure Spark
+    JOB COUNT (round-14: ~2 tiny jobs/file); the header check and the
+    sample read's schema inference are both satisfiable from the first
+    line read locally. Returns ``None`` whenever the header cannot be
+    trusted locally — remote path, compressed or empty file, quoted
+    multi-line header, an empty name (Spark substitutes ``_cN``),
+    duplicate normalized names — and the caller falls back to Spark's
+    own header read, whose semantics this path must exactly
+    reproduce."""
     import csv as _csv
     import io
 
@@ -86,7 +91,11 @@ def _local_csv_header_columns(path: str) -> list[str] | None:
         row = next(_csv.reader(io.StringIO(text)))
     except (StopIteration, _csv.Error):
         return None
-    if not row or len({c.strip().lower() for c in row}) != len(row):
+    if (
+        not row
+        or not all(row)
+        or len({c.strip().lower() for c in row}) != len(row)
+    ):
         return None  # empty or duplicate-name header: let Spark decide
     return row
 
@@ -158,55 +167,54 @@ def validate_csv(
 #: validation stays O(1) data per file no matter the file size.
 CSV_BATCH_MAX_BYTES = 8 << 20
 
-#: basenames whose URI spelling (input_file_name) equals os.path.basename
-_SAFE_BASE = re.compile(r"^[A-Za-z0-9._=-]+$")
+
+def _collect_staged(paths: list[str], build) -> list:
+    """Hardlink-stage ``paths`` (sources/scanstage.py), collect the rows
+    of ``build(scan)`` — ``scan`` reads the link dir and carries each
+    row's list index in ``_f`` — and remove the links. Raises
+    ``OSError`` when the group cannot be staged; the caller then
+    validates its files one by one."""
+    link_dir = scanstage.stage_link_dir(paths)
+    if link_dir is None:
+        raise OSError("group could not be hardlink-staged")
+    try:
+        return build(link_dir).collect()
+    finally:
+        scanstage.cleanup_dirs([link_dir])
 
 
 def _csv_group_date_probe(
     spark: SparkSession, cols: list[str], paths: list[str], spec: TableSpec
 ) -> dict[str, tuple[bool, str]]:
     """The per-file date probe for a HEADER GROUP of small CSVs in ONE
-    Spark job: scan the group as a single multi-path read (explicit
-    all-string DDL schema — no inference, no py4j StructType build),
-    rank rows per file (monotonic ids are in read order within a file),
-    and count unparseable non-null values among each file's first
-    ``DATE_SAMPLE_ROWS`` rows per timestamp column — the identical
-    verdict rule, message included, as :func:`validate_csv`'s loop."""
+    Spark job: scan the group's link dir (explicit all-string schema —
+    no inference), rank rows per file (monotonic ids are in read order
+    within a file), and count unparseable non-null values among each
+    file's first ``DATE_SAMPLE_ROWS`` rows per timestamp column — the
+    identical verdict rule, message included, as :func:`validate_csv`'s
+    loop."""
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
-
-    from mini_data_platform_spark.sources.scanstage import (
-        cleanup_dirs,
-        stage_link_dir,
-    )
 
     lower = {c.strip().lower() for c in cols}
     ts_cols = [t for t in spec.timestamp_columns if t in lower]
     if not ts_cols:
         return {p: (True, "") for p in paths}
-    base = {}
-    for p in paths:
-        base[os.path.basename(p)] = p
     # programmatic schema, not hand-assembled DDL: header names are
     # arbitrary user bytes (backticks included) and StructType needs no
     # quoting — same construction validate_csv's fast path uses
     schema = T.StructType(
         [T.StructField(c.strip().lower(), T.StringType()) for c in cols]
     )
-    # large groups: hardlink-stage into one dir so reader construction
-    # is one listStatus, not a ~1.8 ms/path qualification round
-    # (sources/scanstage.py); the probe collects before cleanup
-    link_dir = stage_link_dir(paths)
-    try:
+
+    def build(link_dir):
         df = (
             spark.read.schema(schema)
             .option("header", True)
             .option("mode", "PERMISSIVE")
-            .csv(link_dir if link_dir is not None else paths)
+            .csv(link_dir)
             .select(
-                F.regexp_extract(
-                    F.input_file_name(), "([^/]+)$", 1
-                ).alias("_f"),
+                scanstage.link_id().alias("_f"),
                 F.monotonically_increasing_id().alias("_i"),
                 *[F.col(t) for t in ts_cols],
             )
@@ -214,7 +222,7 @@ def _csv_group_date_probe(
         ranked = df.withColumn(
             "_r", F.row_number().over(Window.partitionBy("_f").orderBy("_i"))
         ).where(F.col("_r") <= DATE_SAMPLE_ROWS)
-        counted = ranked.groupBy("_f").agg(
+        return ranked.groupBy("_f").agg(
             *[
                 F.count_if(
                     F.col(t).isNotNull() & _parseable_ts(F.col(t)).isNull()
@@ -222,19 +230,13 @@ def _csv_group_date_probe(
                 for t in ts_cols
             ]
         )
-        rows = counted.collect()
-    finally:
-        if link_dir is not None:
-            cleanup_dirs([link_dir])
+
     out: dict[str, tuple[bool, str]] = {p: (True, "") for p in paths}
-    for row in rows:
-        path = base.get(row["_f"])
-        if path is None:
-            continue  # defensive: unexpected provenance name
+    for row in _collect_staged(paths, build):
         for t in ts_cols:  # first failing column wins, like the loop
             bad = int(row[t])
             if bad:
-                out[path] = (
+                out[paths[row["_f"]]] = (
                     False,
                     f"{t} parse issue: {bad} unparseable in first "
                     f"{DATE_SAMPLE_ROWS}",
@@ -255,56 +257,47 @@ def _ndjson_group_probe(
     deterministic form of the per-file path's ``.first()``."""
     from pyspark.sql.window import Window
 
-    from mini_data_platform_spark.sources.scanstage import (
-        cleanup_dirs,
-        stage_link_dir,
-    )
-
-    base = {os.path.basename(p): p for p in paths}
-    link_dir = stage_link_dir(paths)  # see _csv_group_date_probe
-    lines = (
-        spark.read.text(link_dir if link_dir is not None else paths)
-        .select(
-            F.regexp_extract(F.input_file_name(), "([^/]+)$", 1).alias("_f"),
-            F.monotonically_increasing_id().alias("_i"),
-            "value",
+    def build(link_dir):
+        lines = (
+            spark.read.text(link_dir)
+            .select(
+                scanstage.link_id().alias("_f"),
+                F.monotonically_increasing_id().alias("_i"),
+                "value",
+            )
+            .where(F.trim("value") != "")
         )
-        .where(F.trim("value") != "")
-    )
-    ranked = lines.withColumn(
-        "_r", F.row_number().over(Window.partitionBy("_f").orderBy("_i"))
-    ).where(F.col("_r") <= JSON_SAMPLE_RECORDS)
-    obj = F.regexp_replace(F.trim("value"), r"^[\[,]+|[\],]+$", "")
-    keyed = ranked.select("_f", "_i", obj.alias("obj")).where(
-        F.col("obj") != ""
-    )
-    required = F.array(*[F.lit(c) for c in sorted(spec.required)])
-    bad = keyed.select(
-        "_f",
-        "_i",
-        F.array_except(
-            required,
-            F.transform(
-                F.coalesce(
-                    F.json_object_keys("obj"), F.array().cast("array<string>")
+        ranked = lines.withColumn(
+            "_r", F.row_number().over(Window.partitionBy("_f").orderBy("_i"))
+        ).where(F.col("_r") <= JSON_SAMPLE_RECORDS)
+        obj = F.regexp_replace(F.trim("value"), r"^[\[,]+|[\],]+$", "")
+        keyed = ranked.select("_f", "_i", obj.alias("obj")).where(
+            F.col("obj") != ""
+        )
+        required = F.array(*[F.lit(c) for c in sorted(spec.required)])
+        bad = keyed.select(
+            "_f",
+            "_i",
+            F.array_except(
+                required,
+                F.transform(
+                    F.coalesce(
+                        F.json_object_keys("obj"),
+                        F.array().cast("array<string>"),
+                    ),
+                    F.lower,
                 ),
-                F.lower,
-            ),
-        ).alias("missing"),
-    ).where(F.size("missing") > 0)
-    firsts = bad.groupBy("_f").agg(
-        F.min_by("missing", F.col("_i")).alias("missing")
-    )
-    try:
-        rows = firsts.collect()
-    finally:
-        if link_dir is not None:
-            cleanup_dirs([link_dir])
+            ).alias("missing"),
+        ).where(F.size("missing") > 0)
+        return bad.groupBy("_f").agg(
+            F.min_by("missing", F.col("_i")).alias("missing")
+        )
+
     out = {p: (True, "") for p in paths}
-    for row in rows:
-        p = base.get(row["_f"])
-        if p is not None:
-            out[p] = (False, f"Missing columns: {sorted(row['missing'])}")
+    for row in _collect_staged(paths, build):
+        out[paths[row["_f"]]] = (
+            False, f"Missing columns: {sorted(row['missing'])}",
+        )
     return out
 
 
@@ -322,66 +315,54 @@ def validate_files(
     batch their Spark work per group: CSVs whose header parses
     driver-side get their column check WITHOUT Spark and share ONE
     date-probe job per header group; ndjson files share ONE
-    required-key job. Everything else — large files, remote paths,
-    array JSON, parquet, ORC, duplicate or non-URI-safe basenames —
-    takes the unchanged per-file :func:`validate_file` through the
-    thread pool. Verdicts are byte-identical to the per-file path
+    required-key job. Each group probe scans the group's hardlink
+    staging dir (sources/scanstage.py), which names every file by its
+    list index, so any file name works. Everything else — large files,
+    remote paths, array JSON, parquet, ORC, groups that cannot be
+    staged — takes the unchanged per-file :func:`validate_file` through
+    the thread pool. Verdicts are byte-identical to the per-file path
     (equivalence is pinned in tests/test_sources.py)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from mini_data_platform_spark.sources.formats import (
-        detect_format_path,
         sniff_json_layout_path,
     )
 
-    batched: dict[str, list[str]] = {}  # csv header sig -> paths
+    batched: dict[tuple[str, ...], list[str]] = {}  # csv header -> paths
     nd_group: list[str] = []
     verdicts: dict[str, tuple[bool, str]] = {}
     fallback: list[str] = []
-    seen_bases = set()
     for p in paths:
         try:
             fmt = detect_format_path(p)
             small = os.path.getsize(p) <= CSV_BATCH_MAX_BYTES
         except Exception:  # noqa: BLE001 — unreadable: per-file decides
             fmt, small = None, False
-        base_name = os.path.basename(p)
-        # input_file_name() reports the URI spelling — only join
-        # verdicts back on basenames where the two are identical
-        joinable = base_name not in seen_bases and bool(
-            _SAFE_BASE.match(base_name)
-        )
-        if fmt == "csv" and small and joinable:
+        if fmt == "csv" and small:
             cols = _local_csv_header_columns(p)
             if cols is not None:
-                seen_bases.add(base_name)
                 missing = _missing(cols, spec)
                 if missing:
                     verdicts[p] = (
                         False, f"Missing required columns: {missing}",
                     )
                 else:
-                    batched.setdefault("\x00".join(cols), []).append(p)
+                    batched.setdefault(tuple(cols), []).append(p)
                 continue
-        elif (
-            fmt == "json"
-            and small
-            and joinable
-            and sniff_json_layout_path(p) == "ndjson"
-        ):
-            seen_bases.add(base_name)
+        elif fmt == "json" and small and sniff_json_layout_path(p) == "ndjson":
             nd_group.append(p)
             continue
         fallback.append(p)
-    for sig, group in batched.items():
+    for cols, group in batched.items():
         try:
             verdicts.update(
-                _csv_group_date_probe(spark, sig.split("\x00"), group, spec)
+                _csv_group_date_probe(spark, list(cols), group, spec)
             )
         except Exception:  # noqa: BLE001 — group read failed: per-file
-            # (file deleted between listing and probe, unrepresentable
-            # header, ...): the per-file path converts the failure into
-            # a single-file verdict instead of aborting the whole batch
+            # (unstageable group, file deleted between listing and
+            # probe, unrepresentable header, ...): the per-file path
+            # converts the failure into a single-file verdict instead
+            # of aborting the whole batch
             fallback.extend(group)
     if nd_group:
         try:

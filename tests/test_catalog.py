@@ -91,6 +91,28 @@ class TestTableCache:
         again = load_table(spark, str(tmp_path), "t")
         assert again.count() == 5
 
+    def test_rewrite_in_partition_subdir_misses_cache(self, spark, tmp_path):
+        """A partitioned table dir: rewriting a leaf file in place under
+        ``part=a/`` changes neither the top-level listing nor the
+        subdir's own stat, so the freshness token must cover the nested
+        files themselves."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        leaf = tmp_path / "t.parquet" / "part=a" / "x.parquet"
+        os.makedirs(leaf.parent)
+        pq.write_table(pa.table({"id": [1, 2, 3]}), str(leaf))
+        first = load_table(spark, str(tmp_path), "t")
+        assert first.count() == 3
+        sub = os.stat(leaf.parent).st_mtime_ns
+        pq.write_table(pa.table({"id": [1, 2, 3, 4, 5]}), str(leaf))
+        assert os.stat(leaf.parent).st_mtime_ns == sub  # listing unchanged
+        again = load_table(spark, str(tmp_path), "t")
+        assert again is not first
+        assert again.count() == 5
+
     def test_cache_holds_plans_not_results(self, spark):
         # the cached frame is lazy: no storage level, no materialization
         df = load_table(spark, SF, "region")

@@ -327,9 +327,9 @@ class TestBatchIngest:
         calls = []
         real = runner_mod._read_group
 
-        def spy(spark_, sig, paths, stage_dirs=None):
+        def spy(spark_, sig, paths, *rest):
             calls.append(sorted(os.path.basename(p) for p in paths))
-            return real(spark_, sig, paths, stage_dirs)
+            return real(spark_, sig, paths, *rest)
 
         monkeypatch.setattr(runner_mod, "_read_group", spy)
         _put(lake, "a_nd.json", GOOD_NDJSON)
@@ -340,21 +340,18 @@ class TestBatchIngest:
         assert calls == [["a_nd.json", "b_nd.json"]]
 
     def test_large_group_hardlink_staged_scan(self, spark, lake):
-        """Groups at/above scanstage.STAGE_MIN_FILES read through a
-        hardlink-staged DIRECTORY (one listStatus) instead of an
-        explicit path list (~1.8 ms/path JVM qualification each — the
-        INGEST_SCALE r15 4096/10k-file wall). Semantics must be
-        unchanged: per-file provenance ranks (later file wins), all
-        rows present, and the staging dirs removed after the batch."""
+        """A large group reads through a hardlink-staged DIRECTORY (one
+        listStatus) instead of an explicit path list (~1.8 ms/path JVM
+        qualification each — the INGEST_SCALE r15 4096/10k-file wall),
+        and the batch crosses the runner's persist threshold. Semantics
+        must be unchanged: per-file provenance ranks (later file wins),
+        all rows present, and the staging dirs removed after the
+        batch."""
         import glob as _glob
         import tempfile
 
-        from mini_data_platform_spark.sources.scanstage import (
-            STAGE_MIN_FILES,
-        )
-
         hdr = "sale_id,sale_date,customer_id,product_id,quantity,amount\n"
-        n = STAGE_MIN_FILES + 4
+        n = 68
         for i in range(n):
             # same key 'k' in every file: the LAST file must win
             _put(
@@ -393,32 +390,130 @@ class TestBatchIngest:
 
     def test_non_uri_safe_basename_falls_back_losslessly(self, spark, lake):
         """A filename whose URI spelling differs from its basename
-        (space -> %20) must not silently drop rows through the rank
-        join — such batches stage the legacy per-file way."""
+        (space -> %20) must not silently drop rows: the rank comes from
+        the link name's numeric prefix, never from the basename."""
         _put(lake, "sp ace.csv", DIRTY_CSV)
         report, _ = _run(spark, lake)
         assert [o.status for o in report.outcomes] == ["loaded"]
         got = {r["sale_id"] for r in spark.read.parquet(lake["target"]).collect()}
         assert {"s1", "s2", "s3"} | FILLER_KEYS <= got
 
+    def test_space_in_name_shares_its_group_scan(self, spark, lake,
+                                                 monkeypatch):
+        """``sp ace.csv`` joins its header group: the group is read by
+        ONE ``_read_group`` call, and every row lands."""
+        import mini_data_platform_spark.runner as runner_mod
+
+        calls = []
+        real = runner_mod._read_group
+
+        def spy(spark_, sig, paths, *rest):
+            calls.append(sorted(os.path.basename(p) for p in paths))
+            return real(spark_, sig, paths, *rest)
+
+        monkeypatch.setattr(runner_mod, "_read_group", spy)
+        _put(lake, "sp ace.csv", DIRTY_CSV)
+        _put(lake, "b.csv", DIRTY_CSV.replace("s1,", "b1,"))
+        report, _ = _run(spark, lake)
+        assert {o.status for o in report.outcomes} == {"loaded"}
+        assert calls == [["b.csv", "sp ace.csv"]]
+        got = {r["sale_id"] for r in spark.read.parquet(lake["target"]).collect()}
+        assert {"s1", "b1", "s2", "s3"} | FILLER_KEYS <= got
+
+    @pytest.mark.parametrize("n_canonical", [3, 67])
+    def test_underscore_name_lands_its_rows(self, spark, lake, n_canonical):
+        """Spark's file listing hides names starting with ``_``; a
+        batch holding ``_late.csv`` among canonical CSVs must still
+        land its row and report it — in a small batch and in one past
+        the runner's persist threshold."""
+        hdr = "sale_id,sale_date,customer_id,product_id,quantity,amount\n"
+        for i in range(n_canonical):
+            _put(lake, f"{i:04d}.csv",
+                 hdr + f"c{i},2024-01-01 00:00:00,C,P,1,1.0\n")
+        late = _put(lake, "_late.csv",
+                    hdr + "late,2024-01-02 00:00:00,CL,P,1,1.0\n")
+        report, _ = _run(spark, lake)
+        outcome = {o.path: o for o in report.outcomes}[late]
+        assert outcome.status == "loaded" and outcome.rows == 1
+        got = {r["sale_id"]: r
+               for r in spark.read.parquet(lake["target"]).collect()}
+        assert len(got) == n_canonical + 1
+        assert got["late"]["customer_id"] == "CL"
+        assert report.rows_upserted == n_canonical + 1
+
     def test_stage_fallback_on_unreadable_signature(
         self, spark, lake, monkeypatch
     ):
-        """When any file's read-signature cannot be derived (remote
-        paths in deployment — simulated by a raising signature), the
-        batch stages the legacy per-file way and the result is
-        unchanged."""
+        """A file whose read-signature cannot be derived (remote paths
+        in deployment — simulated by a signature of ``None``) is read
+        alone at its own path with a literal rank, and the table comes
+        out exactly as the grouped staging leaves it."""
         import mini_data_platform_spark.runner as runner_mod
 
-        def no_sig(path):
-            raise runner_mod._NoSignature(path)
+        def land():
+            _put(lake, "a_dirty.csv", DIRTY_CSV)
+            _put(lake, "b_good.json", GOOD_NDJSON)
+            _put(lake, "c_later.csv", DIRTY_CSV.replace("C1", "CLATER"))
 
-        monkeypatch.setattr(runner_mod, "_file_signature", no_sig)
-        _put(lake, "a_dirty.csv", DIRTY_CSV)
+        def table():
+            return sorted(
+                tuple(sorted(r.asDict().items()))
+                for r in spark.read.parquet(lake["target"]).collect()
+            )
+
+        land()
+        _run(spark, lake)
+        grouped = table()
+        shutil.rmtree(lake["target"])
+        sigs = []
+
+        def spy_read(spark_, sig, paths, *rest):
+            sigs.append(sig)
+            return real_read(spark_, sig, paths, *rest)
+
+        real_read = runner_mod._read_group
+        monkeypatch.setattr(runner_mod, "_file_signature", lambda path: None)
+        monkeypatch.setattr(runner_mod, "_read_group", spy_read)
+        land()
         report, _ = _run(spark, lake)
-        assert [o.status for o in report.outcomes] == ["loaded"]
-        got = {r["sale_id"] for r in spark.read.parquet(lake["target"]).collect()}
-        assert {"s1", "s2", "s3"} <= got
+        assert [o.status for o in report.outcomes] == ["loaded"] * 3
+        assert [o.rows for o in report.outcomes] == [53, 2, 53]
+        assert sigs == [None, None, None]  # one solo scan per file
+        assert table() == grouped
+        s1 = dict([t for t in grouped if dict(t)["sale_id"] == "s1"][0])
+        assert s1["customer_id"] == "CLATER"  # the later file won
+
+    def test_unlinkable_groups_read_file_by_file(self, spark, lake,
+                                                 monkeypatch):
+        """When no group can be hardlink-staged (cross-device tempdir,
+        hardlink-less filesystem), validation probes fall back to
+        per-file verdicts and the runner reads each file at its own
+        path; the table matches per-file mode."""
+        from mini_data_platform_spark.sources import scanstage
+
+        def land():
+            _put(lake, "a_dirty.csv", DIRTY_CSV)
+            _put(lake, "b_good.json", GOOD_NDJSON)
+            _put(lake, "c_bad.csv",
+                 DIRTY_CSV.replace("2024-01-01 10:00:00", "NOT A DATE"))
+
+        def run(**kw):
+            land()
+            report, _ = _run(spark, lake, **kw)
+            table = sorted(
+                tuple(sorted(r.asDict().items()))
+                for r in spark.read.parquet(lake["target"]).collect()
+            )
+            shutil.rmtree(lake["target"])
+            return [(o.status, o.rows) for o in report.outcomes], table
+
+        _, want = run(per_file=True)
+        monkeypatch.setattr(scanstage, "stage_link_dir", lambda *a: None)
+        outcomes, table = run()
+        assert outcomes == [
+            ("validation_failed", None), ("loaded", 53), ("loaded", 2),
+        ]
+        assert table == want
 
     def test_sink_failure_quarantines_to_loading_failed(self, spark, lake):
         _put(lake, "f.csv", DIRTY_CSV)

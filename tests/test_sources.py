@@ -381,10 +381,26 @@ class TestValidateFilesBatched:
         assert got[0] == (True, "")
         assert not got[1][0] and "sale_date parse issue" in got[1][1]
 
+    def test_underscore_name_date_probe(self, spark, tmpdir_str):
+        """Spark's file listing hides names starting with ``_``: a bad
+        date in ``_bad.csv`` must still be probed when it shares a
+        header group with a good file."""
+        from mini_data_platform_spark.sources.validate import validate_files
+
+        good = _write(tmpdir_str, "good.csv", GOOD_CSV)
+        bad = _write(
+            tmpdir_str, "_bad.csv",
+            GOOD_CSV + "a3,NOT A DATE,CUST-5,PROD-5,1,1.0\n",
+        )
+        assert validate_files(spark, [good, bad]) == [
+            (True, ""),
+            (False, "sale_date parse issue: 1 unparseable in first 50"),
+        ]
+
     def test_duplicate_basenames_fall_back(self, spark, tmpdir_str):
-        """Two files with one basename in different dirs: provenance
-        joins on basename, so the second routes to the per-file path —
-        verdicts still correct for both."""
+        """Two files with one basename in different dirs share their
+        header group — provenance is the link's list index, not the
+        basename — and both verdicts are correct."""
         from mini_data_platform_spark.sources.validate import validate_files
 
         d1 = os.path.join(tmpdir_str, "d1")
